@@ -102,8 +102,8 @@ def test_get_wrong_path_is_404(server):
 
 def test_row_cap_overflow_is_400_and_bounded(server):
     """A runaway report must not materialize unboundedly driver-side:
-    run_json streams via toLocalIterator and raises past max_rows, which
-    the HTTP layer maps to 400."""
+    run_json drains at most max_rows + 1 rows and raises past max_rows,
+    which the HTTP layer maps to 400."""
     q = urllib.parse.urlencode(
         {
             "report_id": "latest_purchase_by_user",

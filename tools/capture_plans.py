@@ -7,7 +7,6 @@ cannot run Spark; these files are the plan evidence for the claims in
 OPTIMIZATION_r*.md.
 
 Run: ``python tools/capture_plans.py --round r14 --tag before [query ...]``
-(supersedes the r13-hardcoded tools/capture_plans_r13.py).
 """
 
 from __future__ import annotations
