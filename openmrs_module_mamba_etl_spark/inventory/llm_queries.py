@@ -12,6 +12,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from openmrs_module_mamba_etl_spark.functions import text as T
+from openmrs_module_mamba_etl_spark.functions.partitioning import (
+    spread_to_cores,
+)
 from openmrs_module_mamba_etl_spark.llm.ann import (
     brute_force_topk,
     ivf_topk,
@@ -2873,10 +2876,7 @@ def etl_llm_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from openmrs_module_mamba_etl_spark.llm.curation import (
         decontaminate_from_shingles,
     )
-    from openmrs_module_mamba_etl_spark.llm.dedup import (
-        _spread,
-        losers_from_hashes,
-    )
+    from openmrs_module_mamba_etl_spark.llm.dedup import losers_from_hashes
     from openmrs_module_mamba_etl_spark.llm.sampling import hash_split
 
     docs = table(spark, sf_dir, "documents")
@@ -2894,7 +2894,7 @@ def etl_llm_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     base = (
-        _spread(docs, "doc_id")
+        spread_to_cores(docs, "doc_id")
         .select("doc_id", "lang", "source", derived.alias("_d"))
         .select(
             "doc_id",
@@ -3042,10 +3042,7 @@ def etl_pretok_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         apply_merges_col,
         bpe_train,
     )
-    from openmrs_module_mamba_etl_spark.llm.dedup import (
-        _spread,
-        losers_from_hashes,
-    )
+    from openmrs_module_mamba_etl_spark.llm.dedup import losers_from_hashes
     from openmrs_module_mamba_etl_spark.llm.sampling import hash_bucket
 
     docs = table(spark, sf_dir, "documents")
@@ -3066,7 +3063,7 @@ def etl_pretok_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     base = (
-        _spread(docs, "doc_id")
+        spread_to_cores(docs, "doc_id")
         .select("doc_id", "text", derived.alias("_d"))
         .select(
             "doc_id",
@@ -3190,10 +3187,7 @@ def etl_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from openmrs_module_mamba_etl_spark.llm.curation import (
         decontaminate_from_shingles,
     )
-    from openmrs_module_mamba_etl_spark.llm.dedup import (
-        _spread,
-        losers_from_hashes,
-    )
+    from openmrs_module_mamba_etl_spark.llm.dedup import losers_from_hashes
 
     docs = table(spark, sf_dir, "documents")
     derived = bind(
@@ -3205,7 +3199,7 @@ def etl_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     base = (
-        _spread(docs, "doc_id")
+        spread_to_cores(docs, "doc_id")
         .select("doc_id", "source", derived.alias("_d"))
         .select(
             "doc_id",
@@ -3356,10 +3350,6 @@ def ann_recall_eval_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )[:4]
     ]
     probe_df = spark.createDataFrame(probes, "qid long, cell int")
-
-    from openmrs_module_mamba_etl_spark.functions.partitioning import (
-        spread_to_cores,
-    )
 
     assigned = spread_to_cores(emb).withColumn(
         "cell", nearest_cell(F.col("embedding"), centroids)

@@ -1883,36 +1883,28 @@ def dedup_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs sharing any shingle — strictly an evaluation harness, run on a
     sample at 100 TB (same caveat as ann_recall_eval's brute-force arm);
     counts are integers, ratios exact divisions."""
+    from openmrs_module_mamba_etl_spark.functions.partitioning import (
+        spread_to_cores,
+    )
     from openmrs_module_mamba_etl_spark.functions.similarity import (
         band_hashes,
-        portable_hash60,
         word_shingles,
     )
-    from openmrs_module_mamba_etl_spark.llm.dedup import _pair_join, _spread
+    from openmrs_module_mamba_etl_spark.llm.dedup import (
+        _minhash_signatures,
+        _pair_join,
+    )
 
     num_hashes, bands, rows_per_band = 16, 4, 4
     base = (
-        _spread(table(spark, sf_dir, "documents"), "doc_id")
+        spread_to_cores(table(spark, sf_dir, "documents"), "doc_id")
         .select(
             "doc_id", word_shingles(F.col("text"), 3).alias("shingles")
         )
         .persist()
     )
     ex = base.select("doc_id", F.explode("shingles").alias("sh"))
-    mins = [
-        F.min(
-            portable_hash60(F.concat(F.lit(f"{seed}:"), F.col("sh")))
-        ).alias(f"mh_{seed}")
-        for seed in range(num_hashes)
-    ]
-    sigs = (
-        ex.groupBy("doc_id")
-        .agg(*mins)
-        .select(
-            "doc_id",
-            F.array(*[f"mh_{s}" for s in range(num_hashes)]).alias("sig"),
-        )
-    )
+    sigs = _minhash_signatures(base, "doc_id", num_hashes, portable=True)
     buckets = sigs.select(
         "doc_id",
         F.explode(

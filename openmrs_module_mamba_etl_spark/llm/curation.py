@@ -10,11 +10,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from openmrs_module_mamba_etl_spark.functions.partitioning import (
+    spread_to_cores,
+)
 from openmrs_module_mamba_etl_spark.functions.similarity import (
     word_ngrams,
     word_shingles,
 )
-from openmrs_module_mamba_etl_spark.llm.dedup import _spread
 
 
 def decontaminate(
@@ -46,11 +48,11 @@ def decontaminate(
     # form is for composites whose shingle column is CACHE-materialized —
     # there the persist boundary blocks the pushdown.
     bench_sh = (
-        _spread(benchmark, id_col)
+        spread_to_cores(benchmark, id_col)
         .select(F.explode(word_shingles(F.col(text_col), n)).alias("shingle"))
         .distinct()
     )
-    corp_sh = _spread(corpus, id_col).select(
+    corp_sh = spread_to_cores(corpus, id_col).select(
         F.col(id_col),
         F.explode(word_shingles(F.col(text_col), n)).alias("shingle"),
     )
@@ -103,7 +105,7 @@ def repetition_stats(
       production cuts are ~0.18–0.20; the defaults here are scaled to the
       synthetic corpus' repetition range so the flag is informative.
     """
-    df = _spread(df, id_col)  # single-file inputs must not gram on 1 core
+    df = spread_to_cores(df, id_col)  # single-file inputs must not gram on 1 core
     g3 = word_ngrams(F.col(text_col), 3)
     base = df.select(
         F.col(id_col),
@@ -178,7 +180,7 @@ def duplicate_span_stats(
             lambda i: F.array_join(F.slice(toks, i, n), " "),
         ),
     ).otherwise(F.expr("array()").cast("array<string>"))
-    pos = _spread(df, id_col).select(
+    pos = spread_to_cores(df, id_col).select(
         F.col(id_col), F.explode(spans).alias("span")
     )
     freq = pos.groupBy("span").agg(F.count(F.lit(1)).alias("span_count"))
@@ -271,7 +273,7 @@ def ngram_lm_score(
     """
     from openmrs_module_mamba_etl_spark.functions.similarity import tokens
 
-    base = _spread(df, id_col).where(F.col(text_col).isNotNull())
+    base = spread_to_cores(df, id_col).where(F.col(text_col).isNotNull())
     toks = base.select(F.col(id_col), tokens(F.col(text_col)).alias("tk"))
     n = F.size("tk")
     pairs = F.zip_with(

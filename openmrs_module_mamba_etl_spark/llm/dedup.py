@@ -13,7 +13,7 @@ except inside LSH buckets / shared-token groups):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from openmrs_module_mamba_etl_spark.functions.caching import (
     attach_caches,
@@ -34,14 +34,6 @@ from openmrs_module_mamba_etl_spark.functions.similarity import (
     word_shingles,
 )
 from openmrs_module_mamba_etl_spark.functions.text import content_hash
-
-
-def _spread(df: DataFrame, id_col: str) -> DataFrame:
-    """Repartition ahead of expression-heavy per-row work — but ONLY when
-    the scan under-parallelizes the cores (one-file test corpora). At
-    100 TB the splits already exceed cores and the old unconditional form
-    was a full-corpus shuffle for nothing (see partitioning.py)."""
-    return spread_to_cores(df, id_col)
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -126,10 +118,10 @@ def token_jaccard_pairs(
     threshold: float = 0.6,
 ) -> DataFrame:
     """Exact token-set Jaccard near-dup pairs (prefix-filtered index)."""
-    keyed = _spread(df, id_col).select(
+    keyed = spread_to_cores(df, id_col).select(
         F.col(id_col), F.array_distinct(tokens(F.col(text_col))).alias("toks")
     )
-    return _set_jaccard_pairs(keyed, id_col, threshold)
+    return _ppjoin_pairs(keyed, id_col, threshold, containment=False)
 
 
 def ngram_jaccard_pairs(
@@ -145,10 +137,10 @@ def ngram_jaccard_pairs(
     Jaccard: shuffled copies of a document stop matching. Same prefix-
     filtered index; the posting key is the n-gram.
     """
-    keyed = _spread(df, id_col).select(
+    keyed = spread_to_cores(df, id_col).select(
         F.col(id_col), word_shingles(F.col(text_col), n).alias("toks")
     )
-    return _set_jaccard_pairs(keyed, id_col, threshold)
+    return _ppjoin_pairs(keyed, id_col, threshold, containment=False)
 
 
 def containment_pairs(
@@ -162,124 +154,44 @@ def containment_pairs(
 
     Catches what symmetric Jaccard structurally misses: a short document
     (boilerplate block, quotation, excerpt) living inside a much larger
-    one — J is diluted by the big doc's size, C is not. The prefix filter
-    is one-sided: C ≥ t forces |A∩B| ≥ ⌈t·|A|⌉, so A's earliest common
-    shingle (global-df-ascending canonical order) sits in A's first
-    |A|−⌈t·|A|⌉+1 shingles; B admits no such bound (nothing relates |B|
-    to the overlap), so the contained side probes with only its rare
-    prefix shingles while the container side posts everything — candidate
-    volume is bounded by A-prefix rarity, and ubiquitous shingles never
-    drive the join from the probe side. Verification is exact
-    ``array_intersect`` on full shingle sets: output identical to
-    all-pairs, one (shingle)-keyed shuffle + one (pair)-keyed contraction.
+    one — J is diluted by the big doc's size, C is not. Ordered pairs
+    (A, B), A ≠ B; the prefix-filtered join and exact verification of
+    :func:`_ppjoin_pairs`, with A's prefix probing B's full posting.
     """
-    keyed = _spread(df, id_col).select(
+    keyed = spread_to_cores(df, id_col).select(
         F.col(id_col), word_shingles(F.col(text_col), n).alias("toks")
     )
-    sizes = keyed.select(
-        F.col(id_col),
-        F.col("toks"),
-        F.size("toks").alias("n_toks"),
-        (F.size("toks") - F.ceil(F.lit(threshold) * F.size("toks")) + 1)
-        .cast("int")
-        .alias("prefix_len"),
-    ).persist()
-    posting = sizes.select(id_col, "prefix_len", F.explode("toks").alias("token"))
-    # Vocabulary + xxhash64 injectivity probe — same exact fast path as
-    # _set_jaccard_pairs: when the hash is a verified bijection on this
-    # corpus' shingle vocabulary, the probe/post join keys and the
-    # verification arrays use 8-byte hashes (specialized long codegen)
-    # instead of strings; otherwise the string path is kept.
-    tok_df = (
-        posting.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("tok_df"))
-        .persist()
-    )
-    probe = tok_df.select(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct(F.xxhash64("token")).alias("nh"),
-    ).first()
-    hash_injective = bool(probe is not None and probe["n"] == probe["nh"])
-    join_token = (
-        F.xxhash64("token") if hash_injective else F.col("token")
-    ).alias("token")
-    a_prefix = (
-        posting.join(tok_df, "token")
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy(id_col).orderBy(
-                    F.col("tok_df").asc(), F.col("token").asc()
-                )
-            ),
-        )
-        .where(F.col("rn") <= F.col("prefix_len"))
-        .select(F.col(id_col).alias("id_a"), join_token)
-    )
-    b_full = posting.select(F.col(id_col).alias("id_b"), join_token)
-    candidates = (
-        a_prefix.join(
-            b_full,
-            [
-                a_prefix["token"] == b_full["token"],
-                a_prefix["id_a"] != b_full["id_b"],
-            ],
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    def verify_toks(c: Column) -> Column:
-        if hash_injective:
-            return F.transform(c, lambda t: F.xxhash64(t))
-        return c
-
-    a = sizes.select(
-        F.col(id_col).alias("id_a"),
-        verify_toks(F.col("toks")).alias("toks_a"),
-        F.col("n_toks").alias("n_a"),
-    )
-    b = sizes.select(
-        F.col(id_col).alias("id_b"),
-        verify_toks(F.col("toks")).alias("toks_b"),
-    )
-    return attach_caches(
-        candidates.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.size(F.array_intersect("toks_a", "toks_b"))
-                / F.col("n_a")
-            ).alias("containment"),
-        )
-        .where(F.col("containment") >= threshold)
-        .select(
-            "id_a", "id_b", F.round("containment", 6).alias("containment")
-        ),
-        sizes,
-        tok_df,
-    )
+    return _ppjoin_pairs(keyed, id_col, threshold, containment=True)
 
 
-def _set_jaccard_pairs(
+def _ppjoin_pairs(
     keyed: DataFrame,
     id_col: str,
     threshold: float,
+    containment: bool,
 ) -> DataFrame:
-    """Exact set-Jaccard pairs over (id, toks: distinct array) input —
-    prefix filtering (AllPairs/PPJoin) + array-intersect verification.
+    """Exact set-similarity pairs over (id, toks: distinct array) input —
+    prefix filtering (AllPairs/PPJoin; Bayardo et al. WWW 2007, Xiao et
+    al. WWW 2008) + ``array_intersect`` verification. Builds a plan only:
+    no Spark job runs until the caller's action.
 
     A naive inverted-index join is O(Σ df²): one token present in every
-    document yields |corpus|²/2 candidates on its own. Prefix filtering
-    kills that exactly: order tokens by ascending global document
-    frequency; if J(x,y) ≥ t then |x∩y| ≥ ⌈t·|x|⌉, so (pigeonhole, shared
-    canonical order) the SMALLEST common token lands in the first
-    |x| − ⌈t·|x|⌉ + 1 tokens of BOTH docs. Index only those prefixes —
-    the rarest ~(1−t) fraction of each doc — and ubiquitous tokens never
-    enter the join. Candidates are verified with exact
-    ``array_intersect`` on the full token arrays, so the output is
-    identical to the naive algorithm (no recall loss).
+    document yields |corpus|²/2 candidates on its own. The prefix rule:
+    order tokens by ascending global document frequency (ties by token);
+    a pair that reaches t has |x∩y| ≥ ⌈t·|x|⌉ (Jaccard J ≥ t and
+    containment C(x→y) ≥ t both imply it), so by pigeonhole x's SMALLEST
+    common token lies in x's first |x| − ⌈t·|x|⌉ + 1 tokens. Only the
+    rarest ~(1−t) fraction of x probes; ubiquitous tokens never drive
+    the join. The two candidate joins:
+
+    - Jaccard (id_a < id_b): symmetric, so the bound holds for BOTH
+      sides — prefix joins prefix, pruned further by PPJoin's length and
+      positional filters. Score |x∩y| / (|x| + |y| − |x∩y|).
+    - Containment (id_a ≠ id_b): nothing bounds the container's side, so
+      A's prefix joins B's FULL posting. Score |A∩B| / |A|.
+
+    Candidates are verified with exact ``array_intersect`` on the full
+    token arrays, so the output equals the naive all-pairs result.
     """
     # persist() marks are MEMORY_AND_DISK and LRU-evictable under Spark's
     # unified memory manager, so repeated batch calls degrade gracefully;
@@ -295,49 +207,10 @@ def _set_jaccard_pairs(
         .cast("int")
         .alias("prefix_len"),
     )
-
     posting = sizes.select(
         id_col, "prefix_len", "n_toks", F.explode("toks").alias("token")
     )
-    # persist(): the vocabulary table feeds BOTH the prefix ranking and
-    # the injectivity probe below; cached, the exploded-posting
-    # aggregation runs once for the pair of them.
-    tok_df = (
-        posting.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("tok_df"))
-        .persist()
-    )
-    # Injectivity probe (r14): verification re-intersects full token
-    # arrays per candidate pair, and ArrayIntersect over array<string>
-    # runs on a boxed generic hash set, while array<bigint> gets the
-    # specialized long OpenHashSet codegen. xxhash64 is injective on
-    # this corpus' vocabulary iff distinct(token) == distinct(hash) —
-    # ONE tiny aggregate over the already-computed vocab. Under a
-    # verified bijection, hash-equality ⟺ token-equality, so candidate
-    # matches and |x∩y| are IDENTICAL — this is an exact rewrite with a
-    # data-dependent guard, not a probabilistic one (guide §1.2 per-task
-    # work; §2.3 narrower types — the pair join then ships 8-byte
-    # elements instead of strings). The probe is an eager driver-side
-    # job (like duplicate_clusters' size gate); it also pre-populates
-    # the cached token/vocab tables the main action reuses.
-    probe = tok_df.select(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct(F.xxhash64("token")).alias("nh"),
-    ).first()
-    hash_injective = bool(probe is not None and probe["n"] == probe["nh"])
-
-    # persist(): the candidate self-join below reads `ranked` on BOTH
-    # sides, and an unpersisted frame is planned twice — the whole
-    # posting ⋈ tok_df ⋈ row_number prefix chain (two exploded-posting
-    # aggregations, two window sorts) ran once per side (r13 plan audit:
-    # the ranked subtree appeared under both join inputs). Caching the
-    # prefix table — the rarest ~(1−t) fraction of each doc's tokens,
-    # far smaller than the posting it contracts — computes it once.
-    # Only the four join-relevant columns are cached (r14: tok_df and
-    # prefix_len dropped; token hashed to long on the fast path).
-    join_token = (
-        F.xxhash64("token") if hash_injective else F.col("token")
-    ).alias("token")
+    tok_df = posting.groupBy("token").agg(F.count(F.lit(1)).alias("tok_df"))
     ranked = (
         posting.join(tok_df, "token")
         .withColumn(
@@ -349,77 +222,115 @@ def _set_jaccard_pairs(
             ),
         )
         .where(F.col("rn") <= F.col("prefix_len"))
-        .select(F.col(id_col), "n_toks", "rn", join_token)
-        .persist()
+        .select(F.col(id_col), "n_toks", "rn", "token")
     )
-    # Length filter (PPJoin): J ≥ t forces min(|x|,|y|) ≥ t·max(|x|,|y|) —
-    # prune size-incompatible candidates before the verification join.
-    # Positional filter (PPJoin): a match at positions (px, py) bounds the
-    # overlap at 1 + min(|x|−px, |y|−py); prune matches that cannot reach
-    # the required overlap ⌈t·(|x|+|y|)/(1+t)⌉. The earliest common token
-    # of a true pair always passes (all its common tokens sit at ≥ those
-    # positions), so recall stays exact — only doomed matches drop. The
-    # 1e-9 slack keeps float ceil from over-pruning exact-integer bounds.
-    a_r, b_r = ranked.alias("a"), ranked.alias("b")
-    required_overlap = F.ceil(
-        F.lit(threshold / (1.0 + threshold))
-        * (F.col("a.n_toks") + F.col("b.n_toks"))
-        - F.lit(1e-9)
-    )
-    candidates = (
-        a_r.join(
-            b_r,
-            [
-                F.col("a.token") == F.col("b.token"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-                F.least("a.n_toks", "b.n_toks")
-                >= threshold * F.greatest("a.n_toks", "b.n_toks"),
-                F.lit(1)
-                + F.least(
-                    F.col("a.n_toks") - F.col("a.rn"),
-                    F.col("b.n_toks") - F.col("b.rn"),
-                )
-                >= required_overlap,
-            ],
+    if containment:
+        caches = (toked,)
+        a_r, b_r = ranked.alias("a"), posting.alias("b")
+        cond = [F.col(f"a.{id_col}") != F.col(f"b.{id_col}")]
+    else:
+        # persist(): the prefix self-join reads `ranked` on BOTH sides,
+        # and an unpersisted frame is planned twice — the whole posting ⋈
+        # tok_df ⋈ row_number chain ran once per side (r13 plan audit).
+        # The prefix table is far smaller than the posting it contracts.
+        ranked = ranked.persist()
+        caches = (toked, ranked)
+        a_r, b_r = ranked.alias("a"), ranked.alias("b")
+        # Length filter (PPJoin): J ≥ t forces min(|x|,|y|) ≥
+        # t·max(|x|,|y|). Positional filter (PPJoin): a match at
+        # positions (px, py) bounds the overlap at 1 + min(|x|−px,
+        # |y|−py); drop matches that cannot reach the required overlap
+        # ⌈t·(|x|+|y|)/(1+t)⌉. The earliest common token of a true pair
+        # always passes, so recall stays exact. The 1e-9 slack keeps
+        # float ceil from over-pruning exact-integer bounds.
+        required_overlap = F.ceil(
+            F.lit(threshold / (1.0 + threshold))
+            * (F.col("a.n_toks") + F.col("b.n_toks"))
+            - F.lit(1e-9)
         )
+        cond = [
+            F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
+            F.least("a.n_toks", "b.n_toks")
+            >= threshold * F.greatest("a.n_toks", "b.n_toks"),
+            F.lit(1)
+            + F.least(
+                F.col("a.n_toks") - F.col("a.rn"),
+                F.col("b.n_toks") - F.col("b.rn"),
+            )
+            >= required_overlap,
+        ]
+    candidates = (
+        a_r.join(b_r, [F.col("a.token") == F.col("b.token"), *cond])
         .select(
             F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
         )
         .distinct()
     )
 
-    # Verification arrays: on the injective fast path intersect the
-    # hashed (long) arrays — same sizes as the string intersect under
-    # the proven bijection, specialized codegen instead of boxed
-    # hashing, and 8-byte elements through the pair join.
-    def verify_toks(c: Column) -> Column:
-        if hash_injective:
-            return F.transform(c, lambda t: F.xxhash64(t))
-        return c
-
     a = sizes.select(
         F.col(id_col).alias("id_a"),
-        verify_toks(F.col("toks")).alias("toks_a"),
+        F.col("toks").alias("toks_a"),
         F.col("n_toks").alias("n_a"),
     )
     b = sizes.select(
         F.col(id_col).alias("id_b"),
-        verify_toks(F.col("toks")).alias("toks_b"),
+        F.col("toks").alias("toks_b"),
         F.col("n_toks").alias("n_b"),
     )
     inter = F.size(F.array_intersect("toks_a", "toks_b"))
+    # Containment compares the unrounded score, Jaccard the rounded one
+    # (each as its DuckDB oracle does); both output it rounded.
+    if containment:
+        score = inter / F.col("n_a")
+        keep, score_col = score >= threshold, "containment"
+    else:
+        score = inter / (F.col("n_a") + F.col("n_b") - inter)
+        keep, score_col = F.round(score, 6) >= threshold, "jaccard"
     return attach_caches(
         candidates.join(a, "id_a")
         .join(b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(inter / (F.col("n_a") + F.col("n_b") - inter), 6),
+        .where(keep)
+        .select("id_a", "id_b", F.round(score, 6).alias(score_col)),
+        *caches,
+    )
+
+
+def _minhash_signatures(
+    base: DataFrame, id_col: str, num_hashes: int, portable: bool
+) -> DataFrame:
+    """(id, sig) MinHash signatures of ``base``'s ``shingles`` column —
+    the one signature kernel behind :func:`minhash_lsh_pairs` and
+    :func:`minhash_bucket_table`.
+
+    Explode → codegen hash → hash-aggregate min, NOT the
+    higher-order-function form (:func:`minhash_signature`): HOF lambdas
+    evaluate interpreted, while explode + plain column expressions stay
+    in whole-stage codegen. Same hash family, same values. Map-side
+    partial aggregation collapses each doc to one ``num_hashes``-long row
+    per input partition before the shuffle, so the exchange carries
+    |docs| rows regardless of shingle count — the property that holds at
+    100 TB. ``portable`` selects the md5 contract
+    (``portable_hash60`` over ``"<seed>:<shingle>"``) over xxhash64.
+    """
+
+    def shingle_hash(seed: int):
+        if portable:
+            return portable_hash60(F.concat(F.lit(f"{seed}:"), F.col("sh")))
+        return F.xxhash64("sh", F.lit(seed))
+
+    return (
+        base.select(id_col, F.explode("shingles").alias("sh"))
+        .groupBy(id_col)
+        .agg(
+            *[
+                F.min(shingle_hash(seed)).alias(f"mh_{seed}")
+                for seed in range(num_hashes)
+            ]
         )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard"),
-        toked,
-        tok_df,
-        ranked,
+        .select(
+            id_col,
+            F.array(*[f"mh_{s}" for s in range(num_hashes)]).alias("sig"),
+        )
     )
 
 
@@ -446,39 +357,11 @@ def minhash_lsh_pairs(
     stays the production default (~3-4× faster per hash).
     """
     rows_per_band = num_hashes // bands
-    base = _spread(df, id_col).select(
+    base = spread_to_cores(df, id_col).select(
         F.col(id_col),
         word_shingles(F.col(text_col), shingle_len).alias("shingles"),
     ).persist()
-
-    def shingle_hash(seed: int):
-        if portable:
-            return portable_hash60(
-                F.concat(F.lit(f"{seed}:"), F.col("sh"))
-            )
-        return F.xxhash64("sh", F.lit(seed))
-
-    # Signature via explode → codegen hash → hash-aggregate min, NOT
-    # the higher-order-function form (:func:`minhash_signature`): HOF
-    # lambdas evaluate interpreted, while explode + plain column
-    # expressions stay in whole-stage codegen. Same hash family, same
-    # values. Map-side partial aggregation collapses each doc to one
-    # 32-long row per input partition before the shuffle, so the exchange
-    # carries |docs| rows regardless of shingle count — the property that
-    # holds at 100 TB.
-    mins = [
-        F.min(shingle_hash(seed)).alias(f"mh_{seed}")
-        for seed in range(num_hashes)
-    ]
-    sigs = (
-        base.select(id_col, F.explode("shingles").alias("sh"))
-        .groupBy(id_col)
-        .agg(*mins)
-        .select(
-            id_col,
-            F.array(*[f"mh_{s}" for s in range(num_hashes)]).alias("sig"),
-        )
-    )
+    sigs = _minhash_signatures(base, id_col, num_hashes, portable)
     # persist(): `_pair_join` reads `buckets` on both sides of the
     # (band, bucket) self-join; unpersisted, the full signature pipeline
     # (shingle explode → 32-way min hash-aggregate → band hashing) was
@@ -537,7 +420,7 @@ def simhash_pairs(
     # Expression-side signatures beat an Arrow kernel here (measured 50k
     # docs × 200 tokens: 3.3s vs 4.3s warm): shipping every token hash
     # over Arrow costs more than the JVM fold saves. See similarity.py.
-    sigs = _spread(df, id_col).select(
+    sigs = spread_to_cores(df, id_col).select(
         F.col(id_col),
         simhash_bits(F.col(text_col), n_bits=n_bits, portable=portable).alias(
             "bits"
@@ -769,7 +652,7 @@ def semantic_dedup(
         sample_mod=sample_mod, max_sample=max_sample,
     )
     assigned = ivf_assign(
-        _spread(df.select(id_col, vec_col), id_col), vec_col, centroids, "cell"
+        spread_to_cores(df.select(id_col, vec_col), id_col), vec_col, centroids, "cell"
     )
     # Per-row norm once; pairs then cost one dot fold each.
     vecs = assigned.select(
@@ -969,8 +852,8 @@ def minhash_bucket_table(
     row per (doc, band). This is the materialized form an incremental /
     streaming dedup maintains between batches (``stream_dedup_minhash``):
     new batches probe it with a plain equi-join on (band, bucket). Same
-    signature pipeline as :func:`minhash_lsh_pairs` (explode → codegen
-    hash → hash-aggregate min), same portable-md5 contract option.
+    signature kernel as :func:`minhash_lsh_pairs`
+    (:func:`_minhash_signatures`), same portable-md5 contract option.
 
     Scale note: shingles ride along per band row here for verification
     convenience; a 100 TB index stores them once per doc (or re-reads the
@@ -980,31 +863,12 @@ def minhash_bucket_table(
     # persist(): `base` feeds both the signature aggregation and the
     # final sigs ⋈ base re-attach — unpersisted, the shingling projection
     # ran twice (r13 plan audit; same self-join-duplication class as
-    # minhash_lsh_pairs/_set_jaccard_pairs).
-    base = _spread(df, id_col).select(
+    # minhash_lsh_pairs/_ppjoin_pairs).
+    base = spread_to_cores(df, id_col).select(
         F.col(id_col),
         word_shingles(F.col(text_col), shingle_len).alias("shingles"),
     ).persist()
-
-    def shingle_hash(seed: int):
-        if portable:
-            return portable_hash60(F.concat(F.lit(f"{seed}:"), F.col("sh")))
-        return F.xxhash64("sh", F.lit(seed))
-
-    sigs = (
-        base.select(id_col, F.explode("shingles").alias("sh"))
-        .groupBy(id_col)
-        .agg(
-            *[
-                F.min(shingle_hash(seed)).alias(f"mh_{seed}")
-                for seed in range(num_hashes)
-            ]
-        )
-        .select(
-            id_col,
-            F.array(*[f"mh_{s}" for s in range(num_hashes)]).alias("sig"),
-        )
-    )
+    sigs = _minhash_signatures(base, id_col, num_hashes, portable)
     return attach_caches(
         sigs.join(base, id_col)
         .select(

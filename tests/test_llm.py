@@ -17,12 +17,15 @@ from openmrs_module_mamba_etl_spark.llm.ann import (
     lsh_topk,
 )
 from openmrs_module_mamba_etl_spark.llm.dedup import (
+    containment_pairs,
     embedding_cosine_pairs,
     exact_dedup,
     minhash_lsh_pairs,
+    ngram_jaccard_pairs,
     simhash_pairs,
     token_jaccard_pairs,
 )
+from openmrs_module_mamba_etl_spark.sources.parquet import table
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat sleeps "
@@ -81,6 +84,26 @@ def test_token_jaccard_value(spark, docs):
     b = set(NEAR.lower().split())
     expected = round(len(a & b) / len(a | b), 6)
     assert pairs[(0, 2)] == expected
+
+
+@pytest.mark.parametrize(
+    "build",
+    [token_jaccard_pairs, ngram_jaccard_pairs, containment_pairs],
+    ids=lambda f: f.__name__,
+)
+def test_ppjoin_construction_launches_no_job(spark, sf_dir, build):
+    """Building a PPJoin query is plan construction only: no probe, size
+    gate or cache warm-up runs a Spark job before the caller's action."""
+    docs = table(spark, sf_dir, "documents")
+    sc = spark.sparkContext
+    group = f"build-{build.__name__}"
+    sc.setJobGroup(group, group)
+    try:
+        build(docs, "doc_id", "text")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_embedding_pairs_match_numpy(spark):

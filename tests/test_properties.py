@@ -212,35 +212,103 @@ _doc_text = st.lists(
 ).map(" ".join)
 
 
+def _shingle_set(text: str, n: int) -> set[str]:
+    """Python replica of ``word_shingles``: distinct word n-grams, or the
+    whole token string (empty for an empty text) when shorter than n."""
+    toks = text.lower().split()
+    if len(toks) >= n:
+        return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+    return {" ".join(toks)}
+
+
+def _naive_pairs(sets, threshold, containment):
+    """All-pairs reference: Jaccard over i < j (rounded, then compared),
+    containment |A∩B|/|A| over i ≠ j (compared, then rounded)."""
+    out = {}
+    for i, a in sets:
+        for j, b in sets:
+            if (i == j if containment else i >= j) or not a or not b:
+                continue
+            inter = len(a & b)
+            if containment:
+                if inter / len(a) >= threshold:
+                    out[(i, j)] = round(inter / len(a), 6)
+            elif round(inter / len(a | b), 6) >= threshold:
+                out[(i, j)] = round(inter / len(a | b), 6)
+    return out
+
+
+def _ppjoin_vs_naive(spark, docs, threshold, n=2):
+    """Each public PPJoin caller against the naive all-pairs loop;
+    returns the (token, n-gram, containment) results."""
+    from openmrs_module_mamba_etl_spark.llm.dedup import (
+        containment_pairs,
+        ngram_jaccard_pairs,
+        token_jaccard_pairs,
+    )
+
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    cases = [
+        (
+            token_jaccard_pairs(df, "doc_id", "text", threshold),
+            "jaccard",
+            [(i, set(t.split())) for i, t in docs],
+            False,
+        ),
+        (
+            ngram_jaccard_pairs(df, "doc_id", "text", n=n, threshold=threshold),
+            "jaccard",
+            [(i, _shingle_set(t, n)) for i, t in docs],
+            False,
+        ),
+        (
+            containment_pairs(df, "doc_id", "text", n=n, threshold=threshold),
+            "containment",
+            [(i, _shingle_set(t, n)) for i, t in docs],
+            True,
+        ),
+    ]
+    results = []
+    for pairs, score_col, sets, containment in cases:
+        got = {(r["id_a"], r["id_b"]): r[score_col] for r in pairs.collect()}
+        assert got == _naive_pairs(sets, threshold, containment), score_col
+        results.append(got)
+    return results
+
+
 @given(
     texts=st.lists(_doc_text, min_size=2, max_size=10),
     threshold=st.sampled_from([0.5, 0.7, 0.9]),
 )
 @settings(**SETTINGS)
 def test_prefix_filtered_jaccard_matches_naive(spark, texts, threshold):
-    """The AllPairs prefix filter must lose NOTHING: output == naive O(n²)
-    token-set Jaccard over every pair, at any threshold."""
-    from openmrs_module_mamba_etl_spark.llm.dedup import token_jaccard_pairs
+    """The AllPairs prefix filter must lose NOTHING: token-set Jaccard,
+    word-n-gram Jaccard and containment each equal the naive O(n²)
+    all-pairs result, at any threshold."""
+    _ppjoin_vs_naive(spark, list(enumerate(texts)), threshold)
 
-    docs = [(i, t) for i, t in enumerate(texts)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in token_jaccard_pairs(df, "doc_id", "text", threshold).collect()
-    }
 
-    expected = {}
-    for i, ta in docs:
-        for j, tb in docs:
-            if i >= j:
-                continue
-            a, b = set(ta.split()), set(tb.split())
-            if not a or not b:
-                continue
-            jac = round(len(a & b) / len(a | b), 6)
-            if jac >= threshold:
-                expected[(i, j)] = jac
-    assert got == expected
+def test_ppjoin_edge_cases_match_naive(spark):
+    """An empty document, identical documents, and A ⊂ B."""
+    docs = [
+        (0, ""),
+        (1, "aa bb cc dd"),
+        (2, "aa bb cc dd"),
+        (3, "aa bb"),
+        (4, "aa bb cc dd ee ff"),
+        (5, ""),
+    ]
+    tok, gram, cont = _ppjoin_vs_naive(spark, docs, 0.8)
+    # identical documents score 1.0 under every measure
+    assert tok[(1, 2)] == gram[(1, 2)] == 1.0
+    assert cont[(1, 2)] == cont[(2, 1)] == 1.0
+    # A ⊂ B: fully contained one way only (C(4→1) = 3/5 < 0.8)
+    assert cont[(3, 1)] == cont[(1, 4)] == 1.0
+    assert (4, 1) not in cont
+    # an empty text has no tokens, so it pairs with nothing token-wise;
+    # its one shingle is the empty string, shared with the other empty text
+    assert not any({0, 5} & set(p) for p in tok)
+    assert gram[(0, 5)] == cont[(0, 5)] == cont[(5, 0)] == 1.0
 
 
 # --- column profiler ------------------------------------------------------

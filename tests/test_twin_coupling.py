@@ -74,6 +74,14 @@ def test_minhash_pair_shares_one_pipeline():
     assert lq.minhash_lsh_pairs is dd.minhash_lsh_pairs
 
 
+def test_minhash_signatures_share_one_kernel():
+    # the pair join and the streaming index (stream_dedup_minhash, oracle-
+    # checked) sign documents through the SAME helper, so the seeded
+    # dedup_minhash_lsh key and the streaming index cannot drift apart
+    assert "_minhash_signatures" in _calls(dd.minhash_lsh_pairs)
+    assert "_minhash_signatures" in _calls(dd.minhash_bucket_table)
+
+
 def test_simhash_pair_shares_one_pipeline():
     assert "simhash_pairs" in _calls(lq.dedup_simhash)
     twin_calls = _calls(lq.dedup_simhash_portable)["simhash_pairs"]
